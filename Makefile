@@ -15,9 +15,11 @@ INTRACTABLE := p_fuzzy_supplier_pairs,p_minhash_dedup_pipeline,p_leakage_safe_sp
 
 # default lane: everything not marked slow (pytest.ini deselects the
 # slow marker via addopts so the driver's verify-window gate
-# completes; r13 split, zero tests deleted)
+# completes; r13 split, zero tests deleted), then the benchmark's own
+# unit tests (event-log parser, stats) as a separate run
 test:
 	python -m pytest tests/ -x -q
+	python -m pytest perfbench/tests -q -p no:cacheprovider
 
 # opt-in lane: the multi-minute e2e/property tests (3-process pub/sub,
 # codec fuzz, hypothesis temporal model, streaming replays)

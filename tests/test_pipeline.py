@@ -91,6 +91,20 @@ def test_text_ops(docs):
     assert fps[1] == fps[2] and fps[1] != fps[5]
 
 
+def test_fingerprint_keeps_caller_column_named_like_its_temp(spark):
+    # fingerprint projects its normalised text into a temp column; a
+    # caller column of the same name must come back unchanged
+    df = spark.createDataFrame(
+        [(1, "Hello  World example", "keep-me")],
+        "doc_id long, text string, __fp_norm string")
+    out = fingerprint(df, "text", hash_fn="md5")
+    assert out.columns == ["doc_id", "text", "__fp_norm", "fingerprint"]
+    row = out.collect()[0]
+    assert row["__fp_norm"] == "keep-me"
+    ref = fingerprint(df.drop("__fp_norm"), "text", hash_fn="md5")
+    assert row["fingerprint"] == ref.collect()[0]["fingerprint"]
+
+
 @pytest.fixture(scope="module")
 def emb(spark):
     import math

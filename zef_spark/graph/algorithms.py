@@ -5,21 +5,17 @@ closure (`gather`); ranking/centrality is a Spark-native extra that a
 graph-engine user expects.
 
 ``pagerank`` is the classic bulk-synchronous shape: each iteration is
-ONE shuffle (contributions keyed by destination) joined against the
-static out-degree table. Ranks carry as DECIMAL so per-iteration sums
-are exact and partition-order-independent; the only float steps are
-divisions, which are IEEE-deterministic for identical inputs and
-immediately re-rounded into DECIMAL via explicit ROUND (half-up in
-both Spark and DuckDB for positive values — never a Python round(),
-which is banker's, and never a precision-reducing decimal cast) — a
-fixed-iteration run is therefore bit-reproducible and replayable in
-another engine (the `p_pagerank` oracle unrolls the same iterations
-in DuckDB).
+ONE shuffle of contributions keyed by destination over the static
+edge table. Ranks are exact integers (see its docstring), so a
+fixed-iteration run is bit-reproducible and replayable in another
+engine (the `p_pagerank` oracle unrolls the same iterations in
+DuckDB).
 
 100 TB notes: the edge table never moves — only the rank vector
 (O(nodes)) shuffles per iteration; out-degrees are computed once.
-`checkpoint_every` truncates lineage with localCheckpoint the same way
-`NodeSet.gather` does (swap for checkpoint() on a real cluster).
+Every iterative algorithm here runs on `pipeline.distkit.fixpoint`,
+which owns per-round lineage cuts and the convergence probe (the one
+place to switch to a reliable `checkpoint()` on a real cluster).
 Dangling mass: simplified PageRank (rank = (1-d)/N + d·Σ in-contribs)
 — dangling-node mass decays rather than redistributes, the common
 choice for link-spam-robust relevance and the one that keeps the
@@ -29,6 +25,8 @@ per-iteration plan a single aggregation (no extra global sum).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..pipeline.distkit import fixpoint, materialise
 
 #: scale of the intermediate decimal rank representation. 12 decimal
 #: digits of a rank in [0, 1] is far below any ranking-relevant
@@ -44,21 +42,28 @@ def _dec12(col):
     return F.round(col, _SCALE).cast(_DEC)
 
 
+def _moved(new, old, col: str, tol: float) -> DataFrame:
+    """Convergence delta: the ids whose ``col`` moved by ≥ ``tol``
+    between two rounds — empty exactly when the max move is < tol."""
+    return (new.join(old.withColumnRenamed(col, "__p"), "id")
+            .where(F.abs(F.col(col) - F.col("__p")).cast("double")
+                   >= tol))
+
+
 def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
              n_iter: int = 3, damping: float = 0.85,
-             digits: int = 6, checkpoint_every: int = 0,
-             seed_pred=None, tol: float | None = None) -> DataFrame:
+             digits: int = 6, seed_pred=None,
+             tol: float | None = None) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
     Returns (id, rank) for every node appearing as source or target;
     rank rounded to `digits`. Duplicate edges count once.
 
     ``tol`` switches to CONVERGENCE mode: iterate until the max
-    absolute rank delta between rounds drops below ``tol`` (checked
-    with ONE scalar agg per round — rank-vector sized, no edge
-    traffic), capped at ``n_iter`` rounds. The fixed-iteration oracle
-    path (tol=None) is unchanged and stays bit-replayable by
-    pagerank_oracle_sql. In convergence mode each round's ranks are
-    localCheckpoint'd so the growing lineage never re-plans.
+    absolute rank delta between rounds drops below ``tol`` (the
+    round's delta is the rank-vector-sized set of nodes that moved by
+    ≥ tol — empty exactly then; no edge traffic), capped at ``n_iter``
+    rounds. The fixed-iteration oracle path (tol=None) stays
+    bit-replayable by pagerank_oracle_sql.
 
     ``seed_pred`` (a boolean Column over ``id``) switches to
     PERSONALIZED PageRank: the teleport mass (1-d) returns to the
@@ -68,19 +73,14 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     Same per-iteration cost (the rank vector shuffles, nothing
     else).
 
-    Arithmetic (r10, engine-exact): ranks are SCALED INTEGERS
-    (int64 picorank units, 10^12 = total mass 1.0) and every step is
-    integer — init/teleport = mass DIV n, per-edge contribution =
-    rank DIV out_deg (truncating), damping = (num·Σ) DIV den with
-    damping as an exact thousandth. The r09 decimal chain rounded
-    DOUBLE divisions half-up at 12 dp, and Spark's round(double)
-    (shortest-decimal-repr half-up) disagrees with DuckDB's ROUND
-    (binary-value) exactly when a quotient's repr ends in 5 at the
-    cut — the sf1 sweep caught whole rank-classes flipping 1.4e-5 vs
-    1.3e-5. Integer DIV has no rounding step at all, so the chain is
-    bit-identical on any engine at any scale (the kmeans_assign
-    posture). Truncation loses < 1 picorank per edge per round —
-    1e-12 of mass, far below the release grid."""
+    Arithmetic is engine-exact: ranks are SCALED INTEGERS (int64
+    picorank units, 10^12 = total mass 1.0) and every step is integer
+    — init/teleport = mass DIV n, per-edge contribution = rank DIV
+    out_deg (truncating), damping = (num·Σ) DIV den with damping as an
+    exact thousandth. With no rounding step the chain is bit-identical
+    on any engine at any scale (Spark's and DuckDB's round(double)
+    disagree when a quotient's repr ends in 5 at the cut). Truncation
+    loses < 1 picorank per edge per round, far below the release grid."""
     if digits > 12:
         raise ValueError("pagerank: digits must be <= 12 "
                          "(picorank integer scale)")
@@ -91,14 +91,18 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                          "0.001 (exact integer damping arithmetic)")
     mass = 10 ** 12
     tele_mass = (den - num) * (mass // den)
-    e = (edges.select(F.col(src_col).alias("src"),
-                      F.col(dst_col).alias("dst"))
-         .distinct())
-    nodes = (e.select(F.col("src").alias("id"))
-             .unionByName(e.select(F.col("dst").alias("id")))
-             .distinct())
-    deg = e.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg"))
+    e = materialise(edges.select(F.col(src_col).alias("src"),
+                                 F.col(dst_col).alias("dst"))
+                    .distinct())
+    nodes = materialise(e.select(F.col("src").alias("id"))
+                        .unionByName(e.select(F.col("dst").alias("id")))
+                        .distinct())
+    # each edge carries its source's out-degree and stays partitioned
+    # by source, so a round shuffles only the rank vector
+    out = materialise(
+        e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")),
+               "src")
+        .repartition("src"))
     zero = F.lit(0).cast("long")
     if seed_pred is None:
         n = nodes.count()  # scalar: drives the teleport constant only
@@ -116,40 +120,26 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
             "id", F.when(seed_pred,
                          F.lit(mass // ns).cast("long"))
             .otherwise(zero).alias("rank"))
-    if checkpoint_every:
-        e = e.localCheckpoint()
-        deg = deg.localCheckpoint()
 
-    if tol is not None:
-        ranks = ranks.localCheckpoint()
-    for i in range(n_iter):
-        contribs = (e.join(ranks.join(deg, "id"),
-                           e.src == F.col("id"))
-                    .select(F.col("dst").alias("id"),
-                            F.expr("rank div out_deg")
-                            .alias("contrib"))
-                    .groupBy("id")
-                    .agg(F.sum("contrib").alias("in_sum")))
+    # a zero contribution per node: every node gets an in_sum row
+    # without a per-round join against the node table
+    zeros = nodes.select("id", zero.alias("contrib"))
+
+    def step(ranks, _r):
+        in_sums = (out.join(ranks.withColumnRenamed("id", "src"), "src")
+                   .select(F.col("dst").alias("id"),
+                           F.expr("rank div out_deg").alias("contrib"))
+                   .unionByName(zeros)
+                   .groupBy("id")
+                   .agg(F.sum("contrib").alias("in_sum")))
         # teleport + (num·Σ) DIV den: exact int64 throughout
         # (num·Σ <= 850 * 10^12 — no overflow)
-        prev = ranks
-        ranks = (nodes.join(contribs, "id", "left")
-                 .select("id",
-                         (teleport + F.expr(
-                             f"({num} * coalesce(in_sum, 0L)) "
-                             f"div {den}").cast("long"))
-                         .alias("rank")))
-        if tol is not None:
-            ranks = ranks.localCheckpoint()
-            delta = (ranks.join(prev.withColumnRenamed("rank", "__p"),
-                                "id")
-                     .agg(F.max(F.abs(F.col("rank") - F.col("__p")))
-                          .alias("d"))
-                     .collect()[0]["d"])
-            if delta is not None and delta < tol * mass:
-                break
-        elif checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
+        return in_sums.select(
+            "id", (teleport + F.expr(f"({num} * in_sum) div {den}")
+                   .cast("long")).alias("rank"))
+
+    ranks = fixpoint(ranks, step, n_iter, None if tol is None else (
+        lambda new, old, _r: _moved(new, old, "rank", tol * mass)))
 
     # release: half-up to the digits grid IN INTEGER SPACE
     # ((r + shift/2) div shift), then one exact int->double cast and
@@ -167,8 +157,8 @@ def connected_components(edges: DataFrame, src_col: str = "src",
                          dst_col: str = "dst",
                          max_rounds: int = 20) -> DataFrame:
     """(id, component) weakly-connected components over a directed or
-    undirected edge list — min-label propagation with per-round
-    localCheckpoint (the same kernel that clusters near-dup pairs in
+    undirected edge list — min-label propagation on
+    distkit.fixpoint (the same kernel that clusters near-dup pairs in
     pipeline/corpus.dup_clusters; exposed here as the general graph
     algorithm). Isolated semantics: only nodes appearing in an edge
     get a row — union your node table afterwards for singletons.
@@ -330,10 +320,9 @@ def bfs_levels(edges: DataFrame, sources: DataFrame,
     (multi-source BFS — level = hop distance to the nearest source).
     Bulk-synchronous frontier expansion: each round is one join of the
     frontier (O(frontier) rows) against the static edge table plus an
-    anti-join on visited; rounds = eccentricity, lineage cut per round
-    with localCheckpoint. The driver holds only a one-row emptiness
-    probe per round. Nodes unreachable within ``max_depth`` are
-    absent from the result."""
+    anti-join on visited; rounds = eccentricity. A round's delta (its
+    new frontier) is the visited rows at its level. Nodes unreachable
+    within ``max_depth`` are absent from the result."""
     e = edges.select(F.col(src_col).alias("s"),
                      F.col(dst_col).alias("t"))
     if not directed:
@@ -342,19 +331,17 @@ def bfs_levels(edges: DataFrame, sources: DataFrame,
     e = e.distinct().localCheckpoint()
     visited = (sources.select(F.col(id_col).alias("id")).distinct()
                .withColumn("level", F.lit(0)).localCheckpoint())
-    frontier = visited.select("id")
-    for depth in range(1, max_depth + 1):
+
+    def step(visited, depth):
+        frontier = visited.where(F.col("level") == depth - 1)
         nxt = (frontier.join(e, frontier.id == e.s)
                .select(F.col("t").alias("id")).distinct()
-               .join(visited, "id", "left_anti")
-               .localCheckpoint())
-        if not nxt.take(1):
-            break
-        visited = (visited.unionAll(
-            nxt.withColumn("level", F.lit(depth)))
-            .localCheckpoint())
-        frontier = nxt
-    return visited
+               .join(visited, "id", "left_anti"))
+        return visited.unionAll(nxt.withColumn("level", F.lit(depth)))
+
+    return fixpoint(visited, step, max_depth,
+                    lambda new, _old, depth:
+                    new.where(F.col("level") == depth))
 
 
 def clustering_coefficient(edges: DataFrame, src_col: str = "src",
@@ -395,7 +382,7 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     a double). Bulk-synchronous: each round relaxes the CURRENT
     distance table through the static edge table (one keyed join) and
     folds with a min-agg — O(max_hops) rounds, each a frontier-sized
-    join, lineage cut per round. With a fixed ``max_hops`` the result
+    join, lineage cut every 4 rounds. With a fixed ``max_hops`` the result
     is "min cost using ≤K edges", deterministic and replayable by K
     unrolled SQL joins (the oracle shape); raise max_hops past the
     graph diameter for the converged SSSP. Each path's cost
@@ -411,15 +398,21 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     e = e.localCheckpoint()
     dist = (sources.select(F.col(id_col).alias("id")).distinct()
             .withColumn("dist", F.lit(0.0)).localCheckpoint())
-    for i in range(max_hops):
-        relaxed = (dist.join(e, dist.id == e.s)
-                   .select(F.col("t").alias("id"),
-                           (F.col("dist") + F.col("w")).alias("dist")))
-        dist = (dist.unionAll(relaxed)
-                .groupBy("id").agg(F.min("dist").alias("dist")))
-        if (i + 1) % 4 == 0:
-            dist = dist.localCheckpoint()
-    return dist
+
+    # a round relaxes up to 4 hops before its lineage cut: a cut per
+    # hop re-plans each hop as its own query (0.7 s slower over 3 hops
+    # at sf0.1 on 4 cores) while 4 uncut hops keep the plan small
+    def step(dist, r):
+        for _ in range(min(4, max_hops - 4 * (r - 1))):
+            relaxed = (dist.join(e, dist.id == e.s)
+                       .select(F.col("t").alias("id"),
+                               (F.col("dist") + F.col("w"))
+                               .alias("dist")))
+            dist = (dist.unionAll(relaxed)
+                    .groupBy("id").agg(F.min("dist").alias("dist")))
+        return dist
+
+    return fixpoint(dist, step, (max_hops + 3) // 4)
 
 
 
@@ -428,31 +421,31 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
     """(id,) — the k-core: the maximal subgraph where every node has
     degree ≥ k (undirected view of the edge list). Iterative peeling:
     each round drops nodes below k and the edges touching them —
-    O(peel depth) rounds, each one degree aggregate + two semi-joins;
-    lineage cut per round. The driver sees only a one-row count per
-    round. Standard community-density primitive (Seidman 1983)."""
+    O(peel depth) rounds, each one degree aggregate + two semi-joins.
+    A round's delta is the nodes still below k after it — empty
+    exactly when the next peel would change nothing. Standard
+    community-density primitive (Seidman 1983)."""
     e = (edges.select(F.col(src_col).alias("a"),
                       F.col(dst_col).alias("b"))
          .where(F.col("a") != F.col("b")).distinct())
     sym = (e.unionByName(e.select(F.col("b").alias("a"),
                                   F.col("a").alias("b")))
            .distinct().localCheckpoint())
-    # ONE count per round: carry the previous round's size forward
-    # instead of re-counting the pre-peel table (r05 verdict §4)
-    before = sym.count()
-    for _ in range(max_rounds):
-        deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.where(F.col("d") >= k).select(F.col("a").alias("id"))
-        nxt = (sym.join(keep.withColumnRenamed("id", "a"), "a",
-                        "left_semi")
-               .join(keep.select(F.col("id").alias("b")), "b",
-                     "left_semi")
-               .localCheckpoint())
-        after = nxt.count()
-        sym = nxt
-        if after == before:
-            break
-        before = after
+
+    def degree(sym):
+        return sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
+
+    def step(sym, _r):
+        keep = (degree(sym).where(F.col("d") >= k)
+                .select(F.col("a").alias("id")))
+        return (sym.join(keep.withColumnRenamed("id", "a"), "a",
+                         "left_semi")
+                .join(keep.select(F.col("id").alias("b")), "b",
+                      "left_semi"))
+
+    sym = fixpoint(sym, step, max_rounds,
+                   lambda new, _old, _r:
+                   degree(new).where(F.col("d") < k))
     return (sym.select(F.col("a").alias("id")).distinct())
 
 
@@ -470,9 +463,9 @@ def hits(edges: DataFrame, src_col: str = "src",
     never moves.
 
     ``tol`` switches to CONVERGENCE mode: stop when the max absolute
-    hub delta between rounds drops below tol (one scalar agg per
-    round), capped at ``n_iter`` rounds; the fixed-iteration oracle
-    path is unchanged."""
+    hub delta between rounds drops below tol (the round's delta is
+    the hubs that moved by ≥ tol), capped at ``n_iter`` rounds; the
+    fixed-iteration oracle path is unchanged."""
     if n_iter < 1:
         raise ValueError(f"hits: n_iter must be >= 1 (got {n_iter}); "
                          "the hub/authority vectors are defined by at "
@@ -495,9 +488,8 @@ def hits(edges: DataFrame, src_col: str = "src",
                 .select("id", _dec12(F.col("score").cast("double")
                                      / F.col("__t")).alias("score")))
 
-    if tol is not None:
-        h = h.localCheckpoint()
-    for _ in range(n_iter):
+    def step(state, _r):
+        h, _a = state
         a = (e.join(h.withColumnRenamed("id", "src")
                     .withColumnRenamed("score", "__h"), "src")
              .groupBy(F.col("dst").alias("id"))
@@ -506,7 +498,6 @@ def hits(edges: DataFrame, src_col: str = "src",
                   .select("id", F.coalesce(F.col("score"),
                                            F.lit(0).cast(_DEC))
                           .alias("score")))
-        prev_h = h
         h = (e.join(a.withColumnRenamed("id", "dst")
                     .withColumnRenamed("score", "__a"), "dst")
              .groupBy(F.col("src").alias("id"))
@@ -515,28 +506,12 @@ def hits(edges: DataFrame, src_col: str = "src",
                   .select("id", F.coalesce(F.col("score"),
                                            F.lit(0).cast(_DEC))
                           .alias("score")))
-        # r13: checkpoint EVERY iteration (formerly tol-mode only).
-        # _norm references its input subtree twice (total + rows), so
-        # an uncheckpointed fixed-iteration chain grew the logical
-        # plan ~4x per round — analysis/optimization time dominated
-        # the query. LAZY localCheckpoint: the wrapped RDD is created
-        # now (so later iterations build on a bounded LogicalRDD, not
-        # the growing tree) but materializes inside the next real job
-        # instead of an eager job per vector per round (A/B: eager
-        # checkpoints ran 86 jobs/run vs 40 before; lazy keeps the
-        # bounded plan at the before job count). Values are untouched
-        # (pure materialization; guide §5, the pagerank
-        # checkpoint_every discipline).
-        h = h.localCheckpoint(eager=False)
-        a = a.localCheckpoint(eager=False)
-        if tol is not None:
-            delta = (h.join(prev_h.withColumnRenamed("score", "__p"),
-                            "id")
-                     .agg(F.max(F.abs(F.col("score") - F.col("__p"))
-                                .cast("double")).alias("d"))
-                     .collect()[0]["d"])
-            if delta is not None and delta < tol:
-                break
+        # _norm references its input twice (total + rows): without the
+        # per-round cut the fixed-iteration plan grows ~4x per round
+        return h, a
+
+    h, a = fixpoint((h, None), step, n_iter, None if tol is None else (
+        lambda new, old, _r: _moved(new[0], old[0], "score", tol)))
     return (h.withColumnRenamed("score", "__hub")
             .join(a.withColumnRenamed("score", "__auth"), "id")
             .select("id",
@@ -648,22 +623,23 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
     labels = (sym.select(F.col("a").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     from pyspark.sql import Window
-    for _ in range(n_rounds):
+    w = Window.partitionBy("id").orderBy(F.col("cnt").desc(),
+                                         F.col("nl").asc())
+
+    def step(labels, _r):
         nbr = (sym.join(labels.withColumnRenamed("id", "b")
                         .withColumnRenamed("label", "nl"), "b")
                .groupBy(F.col("a").alias("id"), F.col("nl"))
                .agg(F.count(F.lit(1)).alias("cnt")))
-        w = Window.partitionBy("id").orderBy(F.col("cnt").desc(),
-                                             F.col("nl").asc())
         best = (nbr.withColumn("__rk", F.row_number().over(w))
                 .where(F.col("__rk") == 1)
                 .select("id", F.col("nl").alias("label")))
-        labels = (labels.select("id")
-                  .join(best, "id", "left")
-                  .select("id", F.coalesce("label", F.col("id"))
-                          .alias("label"))
-                  .localCheckpoint())
-    return labels
+        return (labels.select("id")
+                .join(best, "id", "left")
+                .select("id", F.coalesce("label", F.col("id"))
+                        .alias("label")))
+
+    return fixpoint(labels, step, n_rounds)
 
 
 def random_walk_cooccurrence(edges: DataFrame, src_col: str = "src",

@@ -692,11 +692,10 @@ class NodeSet:
     def gather(self, rts=None, direction: str = "out",
                max_steps: int | None = None) -> "NodeSet":
         """Transitive closure along a rule set (ITF:9800 `gather`:
-        BFS with optional max_step). Iterative frontier joins; each
-        round materializes via localCheckpoint so lineage stays flat
-        (a 20-hop closure is 20 plain joins, not a 2^20-node plan).
-        At cluster scale swap localCheckpoint for checkpoint() on a
-        reliable checkpoint dir."""
+        BFS with optional max_step). Iterative frontier joins on
+        `pipeline.distkit.fixpoint`, which cuts lineage per round (a
+        20-hop closure is 20 plain joins, not a 2^20-node plan)."""
+        from ..pipeline.distkit import fixpoint
         g, t = self.frame.graph, self.frame.tx
         e = _alive(g.edges, t)
         if rts is not None:
@@ -712,27 +711,23 @@ class NodeSet:
                                  F.col("src_id").alias("__b")))
         step_df = reduce(lambda a, b: a.unionByName(b), hops)
 
-        # ONE job per BFS round: the frontier is checkpointed lazily and
-        # the convergence count materializes it (count, not take(1) —
-        # take escalates over near-empty frames and a lazy checkpoint
-        # needs a completion pass anyway). `visited` needs no checkpoint
-        # of its own: a union of checkpointed frontiers is already a
-        # flat O(rounds) plan.
+        # visited carries the round that reached each id, so a round's
+        # delta (its new frontier) is a filter of the materialised state
         visited = (self.df.select("id").distinct()
+                   .withColumn("__r", F.lit(0))
                    .localCheckpoint(eager=False))
-        frontier = visited
-        steps = 0
-        while max_steps is None or steps < max_steps:
-            nxt = (step_df.join(frontier.withColumnRenamed("id", "__a"),
-                                "__a")
-                   .select(F.col("__b").alias("id")).distinct())
-            new = (nxt.join(visited, "id", "left_anti")
-                   .localCheckpoint(eager=False))
-            if new.count() == 0:
-                break
-            visited = visited.unionByName(new)
-            frontier = new
-            steps += 1
+
+        def step(visited, r):
+            frontier = visited.where(F.col("__r") == r - 1)
+            new = (step_df
+                   .join(frontier.select(F.col("id").alias("__a")), "__a")
+                   .select(F.col("__b").alias("id")).distinct()
+                   .join(visited, "id", "left_anti"))
+            return visited.unionByName(new.withColumn("__r", F.lit(r)))
+
+        visited = fixpoint(visited, step, max_steps,
+                           lambda new, _old, r:
+                           new.where(F.col("__r") == r))
         nodes = _alive(g.nodes, t)
         return NodeSet(self.frame, nodes.join(visited, "id", "left_semi"))
 

@@ -39,9 +39,11 @@ to keep the chain gapless — until all of them resolve.
 
 from __future__ import annotations
 
+import http.client
 import json
 import os
 import threading
+import time
 import urllib.error
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -207,45 +209,78 @@ def serve(host: str = "127.0.0.1", port: int = 0,
 # --------------------------------------------------------------- #
 
 
+#: a request that got no HTTP reply (refused, reset, cut off, timed
+#: out); HTTPError is a URLError too but always handled first
+_TRANSPORT_ERRORS = (urllib.error.URLError, ConnectionError,
+                     http.client.HTTPException, TimeoutError)
+_ATTEMPTS = 5
+
+
 class HttpObjectClient:
     """Tiny conditional-put object client. `put_if_absent` is the
     exact hook signature `MarkerCommitProtocol` binds for real
-    object stores."""
+    object stores. Transport errors retry up to ``_ATTEMPTS`` times:
+    GET, LIST and unconditional PUT (uuid-named blobs) just repeat; a
+    conditional PUT whose reply was lost re-reads the key — our bytes
+    mean it landed, other bytes mean another writer won, a missing
+    key means send it again."""
 
     def __init__(self, url: str, timeout: float = 30.0):
         self.url = url.rstrip("/")
         self.timeout = timeout
 
+    def _send(self, req, attempt: int = 0) -> bytes:
+        try:
+            with urllib.request.urlopen(req, timeout=self.timeout) as r:
+                return r.read()
+        except urllib.error.HTTPError:
+            raise
+        except _TRANSPORT_ERRORS:
+            if attempt == _ATTEMPTS - 1:
+                raise
+        time.sleep(0.05 * 2 ** attempt)
+        return self._send(req, attempt + 1)
+
     def put(self, key: str, data: bytes,
             if_none_match: bool = False) -> bool:
         req = urllib.request.Request(
             f"{self.url}/obj/{key}", data=data, method="PUT")
-        if if_none_match:
-            req.add_header("If-None-Match", "*")
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout):
-                return True
-        except urllib.error.HTTPError as e:
-            if e.code == 412:
-                return False
-            raise
+        if not if_none_match:
+            self._send(req)
+            return True
+        req.add_header("If-None-Match", "*")
+        for attempt in range(_ATTEMPTS):
+            try:
+                with urllib.request.urlopen(req, timeout=self.timeout):
+                    return True
+            except urllib.error.HTTPError as e:
+                if e.code != 412:
+                    raise
+                if attempt == 0:
+                    return False
+                taken = e    # taken after our lost reply: maybe by us
+            except _TRANSPORT_ERRORS:
+                if attempt == _ATTEMPTS - 1:
+                    raise
+                taken = None
+            stored = self.get(key)
+            if stored is not None:
+                return stored == data
+            if taken is not None:  # ours, not yet visible? never guess
+                raise ConnectionError(f"PUT {key}: outcome unknown") \
+                    from taken
+            time.sleep(0.05 * 2 ** attempt)
 
     def get(self, key: str) -> bytes | None:
         try:
-            with urllib.request.urlopen(
-                    f"{self.url}/obj/{key}",
-                    timeout=self.timeout) as r:
-                return r.read()
+            return self._send(f"{self.url}/obj/{key}")
         except urllib.error.HTTPError as e:
             if e.code == 404:
                 return None
             raise
 
     def list(self, prefix: str) -> list[str]:
-        with urllib.request.urlopen(
-                f"{self.url}/list/{prefix}",
-                timeout=self.timeout) as r:
-            return json.loads(r.read())
+        return json.loads(self._send(f"{self.url}/list/{prefix}"))
 
     def watch(self, since: int, timeout: float = 25.0) -> list[int]:
         """Long-poll for commit markers with tx > ``since``: the

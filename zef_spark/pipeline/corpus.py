@@ -1,8 +1,9 @@
 """Corpus-construction operators for training-data pipelines:
 clustering near-duplicates, deterministic sampling, sequence packing,
 TF-IDF. All set-oriented DataFrame plans; the only iteration
-(connected components) is min-label propagation with per-round
-localCheckpoint — O(component diameter) rounds, the right regime for
+(connected components) is min-label propagation on
+`distkit.fixpoint`, which owns the per-round lineage cut and the
+convergence probe — O(component diameter) rounds, the right regime for
 near-dup graphs whose components are dense, shallow template
 families. (For adversarial long-chain graphs the alternating
 large-star/small-star formulation — Kiveris et al., "Connected
@@ -30,9 +31,10 @@ def dup_clusters(pairs: DataFrame, a_col: str = "id_a",
     joins the current labels across the edge list and keeps the
     smaller label; rounds are O(diameter) for the propagation form —
     near-dup clusters are dense and shallow (template families), so
-    convergence is 2-4 rounds in practice. localCheckpoint per round
-    truncates lineage so the plan doesn't grow superlinearly. The
-    driver holds only the one-row convergence count per round."""
+    convergence is 2-4 rounds in practice. Each round carries the
+    previous label, so its delta (the changed labels) is a filter of
+    the round's own materialisation: one probe job per round."""
+    from .distkit import fixpoint
     edges = (pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
              .where(F.col("a") != F.col("b")))
     # undirected: both directions once. LAZY checkpoint: the bounded
@@ -45,30 +47,25 @@ def dup_clusters(pairs: DataFrame, a_col: str = "id_a",
     labels = (sym.select(F.col("a").alias("id"))
               .distinct()
               .withColumn("cluster", F.col("id")))
-    for _ in range(max_rounds):
+
+    def step(labels, _r):
         # candidate label for each node: min over neighbours' labels
-        nbr = (sym.join(labels.withColumnRenamed("id", "b")
-                        .withColumnRenamed("cluster", "nbr_cluster"), "b")
+        nbr = (sym.join(labels.select(F.col("id").alias("b"),
+                                      F.col("cluster")
+                                      .alias("nbr_cluster")), "b")
                .groupBy("a").agg(F.min("nbr_cluster").alias("nbr_min")))
-        # carry the previous label through the round so ONE action per
-        # round both materializes the lazy checkpoint and answers the
-        # convergence probe — no separate checkpoint job, no extra
-        # old-vs-new join (same comparison: old != new on the same id).
-        new_pair = (labels.join(nbr.withColumnRenamed("a", "id"),
-                                "id", "left")
-                    .select("id", F.col("cluster").alias("__old"),
-                            F.least(
-                                F.col("cluster"),
+        return (labels.join(nbr.withColumnRenamed("a", "id"),
+                            "id", "left")
+                .select("id", F.col("cluster").alias("__old"),
+                        F.least(F.col("cluster"),
                                 F.coalesce(F.col("nbr_min"),
                                            F.col("cluster")))
-                            .alias("cluster"))
-                    .localCheckpoint(eager=False))
-        changed = (new_pair.where(F.col("cluster") != F.col("__old"))
-                   .limit(1).count())
-        labels = new_pair.select("id", "cluster")
-        if changed == 0:
-            break
-    return labels
+                        .alias("cluster")))
+
+    labels = fixpoint(labels, step, max_rounds,
+                      lambda new, _old, _r:
+                      new.where(F.col("cluster") != F.col("__old")))
+    return labels.select("id", "cluster")
 
 
 def dedup_keep_representative(df: DataFrame, pairs: DataFrame,

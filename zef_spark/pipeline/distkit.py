@@ -17,18 +17,10 @@ same two-phase plan (abtest.ranksum_agg / evaluation._cum_desc):
 
 Values are IDENTICAL to the keyless window (the order is total and
 ties must be broken by the caller's order columns); only the physical
-plan changes.
-
-r12 (optimization round, guide §1.2/§2.4): the offsets are now
-computed IN-PLAN instead of via the former eager
-`localCheckpoint()` + per-range `collect()` + `createDataFrame()`
-round trip — per-range totals aggregate to ≤ n_ranges rows, an
-exclusive prefix sum runs as a window ordered by `__rid` (keyless
-but BOUNDED: `__rid` is `spark_partition_id()` of an n_ranges-way
-repartition, so the window input can never exceed n_ranges rows —
-tools/keyless_window_scan.py exempts exactly this shape), and the
-offsets broadcast-join back. One Spark action now does what took an
-eager checkpoint job + a collect job + a driver loop.
+plan changes. The offsets are computed in-plan: the prefix sum is a
+window ordered by `__rid`, keyless but bounded (`__rid` is the
+`spark_partition_id()` of an n_ranges-way repartition, the one shape
+tools/keyless_window_scan.py exempts), broadcast-joined back.
 
 The shared `ranged` frame is consumed by two subtrees (local window
 + offset totals); `persist(MEMORY_AND_DISK)` pins BOTH the range
@@ -42,9 +34,15 @@ one action — no eager materialization job. Callers that loop
 (graph rounds) should `unpersist()` when done; one-shot query plans
 leave it to session cache eviction (the bench clears cache between
 queries).
+
+`fixpoint` is the one loop every iterative operator runs on: it owns
+per-round materialisation and the convergence probe (the one place
+for a reliable-directory `checkpoint()` or per-round telemetry).
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
@@ -200,3 +198,33 @@ def global_row_number(df: DataFrame, order_cols: list, out_col: str,
     out = global_cumsum(df, order_cols, F.lit(1).cast("long"),
                         out_col, n_ranges)
     return out.withColumn(out_col, F.col(out_col) - 1)
+
+
+def materialise(state, eager: bool = False):
+    """`localCheckpoint` a DataFrame (or each one in a tuple). Lazy by
+    default: later plans build on the bounded LogicalRDD at once, and
+    the next job that reads it writes its blocks (no extra job; AQE
+    still runs the shuffle stages below the cut here). ``eager`` only
+    where an A/B measured lazy slower."""
+    if isinstance(state, tuple):
+        return tuple(materialise(s, eager) for s in state)
+    return state.localCheckpoint(eager=eager)
+
+
+def fixpoint(state, step, max_rounds: int | None, delta=None):
+    """Iterate ``state = step(state, r)`` for r = 1, 2, ..., up to
+    ``max_rounds`` (None: until converged), materialising each round's
+    state (a DataFrame or a tuple of them).
+
+    ``delta(new, old, r)`` is the frame of what round r changed, built
+    on the materialised ``new``; empty means converged. The probe is
+    `isEmpty()`: ONE job that reads every partition, so it also writes
+    the new state's blocks (`take(1)` stops early and leaves a backfill
+    job; `count()` is two jobs). No ``delta``: fixed rounds, no probe."""
+    rounds = (itertools.count(1) if max_rounds is None
+              else range(1, max_rounds + 1))
+    for r in rounds:
+        old, state = state, materialise(step(state, r))
+        if delta is not None and delta(state, old, r).isEmpty():
+            break
+    return state

@@ -69,13 +69,23 @@ def z_order(df: DataFrame, cols: list[str], bits: int = 8,
 def write_z_ordered(df: DataFrame, path: str, cols: list[str],
                     n_files: int = 0, bits: int = 10,
                     mode: str = "overwrite") -> None:
-    """Write `df` Z-ordered by `cols`: range-partitioned on the
-    z-value (files disjoint in z-space) and sorted within partitions
-    (row groups disjoint). n_files=0 keeps the session's shuffle
-    parallelism."""
-    zdf = z_order(df, cols, bits)
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
-    (zdf.repartitionByRange(n, F.col("__z"))
+    """Write `df` Z-ordered by `cols`: one file per cell of the
+    z-curve's top bits (files disjoint in z-space) and sorted within
+    files (row groups disjoint). Cells are cut at the curve's own
+    edges, not at sampled range boundaries, so the same input always
+    yields the same files. n_files=0 keeps the session parallelism;
+    the file count rounds up to a power of two."""
+    spark = df.sparkSession
+    m = ((n_files or spark.sparkContext.defaultParallelism) - 1) \
+        .bit_length()
+    # per cell, a long key whose hash partition is that cell
+    keys = dict(spark.range(64 << m)
+                .groupBy(F.pmod(F.hash("id"), F.lit(1 << m)))
+                .agg(F.min("id")).collect())
+    route = F.array(*[F.lit(keys[c]).cast("long") for c in range(1 << m)])
+    cell = F.shiftright(F.col("__z"), bits * len(cols) - m)
+    (z_order(df, cols, bits)
+        .repartition(1 << m, route[cell.cast("int")])
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode(mode).parquet(path))

@@ -292,16 +292,18 @@ def fingerprint(df: DataFrame, text_col: str,
     # higher-order transform: an expression referenced inside a lambda
     # is re-evaluated PER ELEMENT (no CSE inside interpreted HOFs), so
     # inlining the regexp would re-run it once per shingle — measured
-    # 6x on the fingerprint stage.
+    # 6x on the fingerprint stage. The temp name avoids every input
+    # column, so a caller's column is never overwritten or dropped.
     norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    tcol = F.col("__fp_norm")
+    tmp = "__fp" + "_" * max(len(c) for c in [*df.columns, out_col])
+    tcol = F.col(tmp)
     n = F.greatest(F.length(tcol) - k + 1, F.lit(1))
     sh = F.transform(F.sequence(F.lit(1), n),
                      lambda i: F.substring(tcol, i, k))
     h = F.xxhash64 if hash_fn == "xxhash64" else F.md5
-    return (df.withColumn("__fp_norm", norm)
+    return (df.withColumn(tmp, norm)
             .withColumn(out_col, h(F.array_min(sh)))
-            .drop("__fp_norm"))
+            .drop(tmp))
 
 
 # PII patterns chosen to parse identically under Java regex (Spark)

@@ -67,10 +67,10 @@ def identify_entities(df: DataFrame, id_col: str,
     """Entity resolution: rows sharing ANY normalized match-key value
     belong to one entity; emits a canonical ``out_col`` (min id of the
     connected component). identify_entities (data_wrangling.py:280)
-    re-expressed as iterative min-label propagation over the
-    record↔key bipartite graph — the standard alternating-groupBy
-    connected-components that scales linearly per round; rounds ≤
-    log(diameter), each round two shuffles."""
+    as min-label propagation over the record↔key bipartite graph:
+    each round two shuffles, its delta the records whose label
+    changed."""
+    from .distkit import fixpoint
     # record -> key nodes (normalized, null-safe)
     pairs = None
     for mc in match_cols:
@@ -84,20 +84,21 @@ def identify_entities(df: DataFrame, id_col: str,
 
     labels = pairs.select("__rid").distinct() \
         .withColumn("__comp", F.col("__rid"))
-    for _ in range(max_iters):
+
+    def step(labels, _r):
         # key label = min over its records; record label = min over keys
         key_min = (pairs.join(labels, "__rid")
                    .groupBy("__key").agg(F.min("__comp").alias("__kmin")))
-        new_labels = (pairs.join(key_min, "__key")
-                      .groupBy("__rid")
-                      .agg(F.min("__kmin").alias("__comp"))
-                      .localCheckpoint())
-        changed = (new_labels.join(labels.withColumnRenamed(
-            "__comp", "__old"), "__rid")
-            .where(F.col("__comp") != F.col("__old")).take(1))
-        labels = new_labels
-        if not changed:
-            break
+        return (pairs.join(key_min, "__key")
+                .groupBy("__rid")
+                .agg(F.min("__kmin").alias("__comp")))
+
+    def changed(new, old, _r):
+        return (new.join(old.withColumnRenamed("__comp", "__old"),
+                         "__rid")
+                .where(F.col("__comp") != F.col("__old")))
+
+    labels = fixpoint(labels, step, max_iters, changed)
     return (df.join(labels.withColumnRenamed("__rid", id_col), id_col,
                     "left")
             .withColumn(out_col, F.coalesce(F.col("__comp"),
