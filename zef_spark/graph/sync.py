@@ -12,12 +12,17 @@ shared storage (the shape Delta Lake's transaction log made standard):
   (token-partitioned parquet — Graph.materialize) plus an empty
   ``txlog/`` directory.
 - ``store.commit(wishes)`` runs the normal wish ``transact`` against
-  the current head, extracts the tx's DELTA (new interval rows + the
-  closures it stamped on existing rows), writes it to a temp segment
-  dir, and claims the tx number with ONE atomic ``os.rename`` to
-  ``txlog/<tx>``. If another process claimed that tx first the rename
-  fails, the local tx is discarded and the commit retries against the
-  refreshed head — optimistic concurrency, last-committer-retries.
+  the current head and writes the tx's DELTA to a temp segment dir,
+  then claims the tx number with ONE atomic ``os.rename`` to
+  ``txlog/<tx>``. A segment is transact's own delta (``TxDelta``):
+  the interval rows it appends, written straight from the driver rows
+  by pyarrow, plus one closure row per stored row it ends. The
+  closure rows' opened-at tx is the only read of the head (one Spark
+  job, none when the tx closes nothing), so the write path never
+  rescans the graph to learn what it wrote. If another process
+  claimed that tx first the rename fails, the local tx is discarded
+  and the commit retries against the refreshed head — optimistic
+  concurrency, last-committer-retries.
 - ``store.head()`` / ``store.refresh()`` reconstruct the graph as
   base ∪ segment appends, with closures applied as ONE broadcast
   join per table (segments are wish-sized — control-plane volume;
@@ -60,13 +65,73 @@ import json
 import os
 import uuid
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
+from .delta import TxDelta, _transact, _tx_time
 from .graph import Graph
 from .schema import (ATTR_VALUES_SCHEMA, EDGES_SCHEMA, NODES_SCHEMA,
                      TAGS_SCHEMA, TXS_SCHEMA)
 
 _SEG_FMT = "{:012d}"
+
+
+def _closure_schema(key: str, key_type, opened: str) -> T.StructType:
+    return T.StructType([T.StructField(key, key_type),
+                         T.StructField(opened, T.LongType()),
+                         T.StructField("__closed_at", T.LongType())])
+
+
+# table -> (segment table of its closure rows, their schema): the key
+# and opened-at tx of a stored row, and the tx that closed it
+_CLOSURES = {
+    "nodes": ("node_closures",
+              _closure_schema("id", T.LongType(), "valid_from_tx")),
+    "edges": ("edge_closures",
+              _closure_schema("id", T.LongType(), "valid_from_tx")),
+    "attr_values": ("av_closures",
+                    _closure_schema("ae_id", T.LongType(),
+                                    "assigned_at_tx")),
+    "tags": ("tag_closures",
+             _closure_schema("name", T.StringType(), "valid_from_tx")),
+}
+
+
+def _write_table(seg: str, name: str, rows: list,
+                 schema: T.StructType) -> None:
+    """Write ``rows`` as the segment table ``name``: one parquet file
+    in the Arrow form of ``schema``, written on the driver by pyarrow,
+    so no Spark job. Readers pass the schema explicitly. Nothing is
+    written for no rows."""
+    if not rows:
+        return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow)]
+    os.makedirs(os.path.join(seg, name))
+    pq.write_table(pa.Table.from_arrays(cols, schema=arrow),
+                   os.path.join(seg, name, "part-00000.parquet"))
+
+
+def _write_delta(seg: str, delta: TxDelta) -> None:
+    """Write a wish tx's segment from the ``TxDelta`` transact
+    computed: its appended rows as they are, and one closure row per
+    stored row it ends. The closure rows' opened-at tx is the only
+    read of the head (``TxDelta.closed_keys``: one Spark job, none
+    when the tx closes nothing)."""
+    os.makedirs(seg, exist_ok=True)
+    for name, rows, schema in (
+            ("nodes", delta.nodes, NODES_SCHEMA),
+            ("edges", delta.edges, EDGES_SCHEMA),
+            ("attr_values", delta.attr_values, ATTR_VALUES_SCHEMA),
+            ("txs", [(delta.tx, delta.time)], TXS_SCHEMA),
+            ("tags", delta.tags, TAGS_SCHEMA)):
+        _write_table(seg, name, rows, schema)
+    for table, keys in delta.closed_keys().items():
+        name, schema = _CLOSURES[table]
+        _write_table(seg, name, [(k, opened, delta.tx)
+                                 for k, opened in keys], schema)
 
 
 class RenameCommitProtocol:
@@ -305,36 +370,19 @@ class GraphStore:
             # base — carry it so the txs dimension stays gapless
             if (x := rd(ck_seg, "txs", TXS_SCHEMA)) is not None:
                 t_new.append(x)
-        close_schema = "id long, valid_from_tx long, __closed_at long"
-        av_close_schema = ("ae_id long, assigned_at_tx long, "
-                          "__closed_at long")
         for _, sp in segs:
-            if (x := rd(sp, "nodes", NODES_SCHEMA)) is not None:
-                n_new.append(x)
-            if (x := rd(sp, "edges", EDGES_SCHEMA)) is not None:
-                e_new.append(x)
-            if (x := rd(sp, "attr_values",
-                        ATTR_VALUES_SCHEMA)) is not None:
-                a_new.append(x)
-            if (x := rd(sp, "txs", TXS_SCHEMA)) is not None:
-                t_new.append(x)
-            p = os.path.join(sp, "node_closures")
-            if os.path.exists(p):
-                n_cl.append(spark.read.schema(close_schema).parquet(p))
-            p = os.path.join(sp, "edge_closures")
-            if os.path.exists(p):
-                e_cl.append(spark.read.schema(close_schema).parquet(p))
-            p = os.path.join(sp, "av_closures")
-            if os.path.exists(p):
-                a_cl.append(spark.read.schema(av_close_schema)
-                            .parquet(p))
-            if (x := rd(sp, "tags", TAGS_SCHEMA)) is not None:
-                tg_new.append(x)
-            p = os.path.join(sp, "tag_closures")
-            if os.path.exists(p):
-                tg_cl.append(spark.read.schema(
-                    "name string, valid_from_tx long, __closed_at long"
-                ).parquet(p))
+            for out, name, schema in (
+                    (n_new, "nodes", NODES_SCHEMA),
+                    (e_new, "edges", EDGES_SCHEMA),
+                    (a_new, "attr_values", ATTR_VALUES_SCHEMA),
+                    (t_new, "txs", TXS_SCHEMA),
+                    (tg_new, "tags", TAGS_SCHEMA),
+                    (n_cl, *_CLOSURES["nodes"]),
+                    (e_cl, *_CLOSURES["edges"]),
+                    (a_cl, *_CLOSURES["attr_values"]),
+                    (tg_cl, *_CLOSURES["tags"])):
+                if (x := rd(sp, name, schema)) is not None:
+                    out.append(x)
         nodes = apply(g.nodes, ["id", "valid_from_tx"], "valid_to_tx",
                       n_new, n_cl)
         edges = apply(g.edges, ["id", "valid_from_tx"], "valid_to_tx",
@@ -365,14 +413,13 @@ class GraphStore:
         against a refreshed head when another process claims the tx
         number first (the atomic-rename race). Returns (head graph
         after commit, receipt)."""
-        from .delta import transact
         last_err = None
         for _ in range(max_retries):
             g = self.refresh()
-            tx = g.max_tx() + 1
-            g2, receipt = transact(g, wishes, time)
+            g2, receipt, delta = _transact(g, wishes, time)
+            tx = delta.tx
             tmp = self.protocol.temp_segment(self.path)
-            self._write_segment(g, g2, tx, tmp)
+            _write_delta(tmp, delta)
             with open(os.path.join(tmp, "idmax.json"), "w") as f:
                 json.dump({"idmax": g2._max_rae_id or 0}, f)
             if not self.protocol.claim(self.path, tx, tmp):
@@ -412,12 +459,7 @@ class GraphStore:
                 json.dump({"idmax": g._max_rae_id or 0}, f)
             # the checkpoint claims tx; it carries no delta rows, but
             # max_tx must stay monotonic — record an empty tx row
-            import datetime
-            self.spark.createDataFrame(
-                [(tx, datetime.datetime(2000, 1, 1)
-                  + datetime.timedelta(days=tx))], TXS_SCHEMA) \
-                .coalesce(1).write.mode("overwrite") \
-                .parquet(os.path.join(tmp, "txs"))
+            _write_table(tmp, "txs", [(tx, _tx_time(tx))], TXS_SCHEMA)
             if not self.protocol.claim(self.path, tx, tmp):
                 import shutil
                 self.protocol.discard(self.path, tx, tmp)
@@ -441,14 +483,10 @@ class GraphStore:
         stay the control plane. On a lost claim race the segment is
         rewritten against the refreshed head's tx (the mapping's ids
         are tx-independent, so retry is cheap and safe)."""
-        import datetime
-        import shutil
         from ..streaming.ingest import mapped_parts
         for _ in range(max_retries):
             g = self.refresh()
             tx = g.max_tx() + 1
-            time = (datetime.datetime(2000, 1, 1)
-                    + datetime.timedelta(days=tx))
             node_parts, edge_parts, av_parts = mapped_parts(
                 batch_df, mapping, tx, batch_label=f"tx {tx}")
             tmp = self.protocol.temp_segment(self.path)
@@ -466,9 +504,7 @@ class GraphStore:
                 wr(edge_parts, "edges")
             if av_parts:
                 wr(av_parts, "attr_values")
-            self.spark.createDataFrame([(tx, time)], TXS_SCHEMA) \
-                .coalesce(1).write.mode("overwrite") \
-                .parquet(os.path.join(tmp, "txs"))
+            _write_table(tmp, "txs", [(tx, _tx_time(tx))], TXS_SCHEMA)
             # record the mapping's band bound: wish commits in ANY
             # process (now or after restart) must mint above it, or a
             # wish id equals the arithmetic id this mapping mints for
@@ -523,48 +559,3 @@ class GraphStore:
             removed.append(p)
         self._head = None
         return removed
-
-    def _write_segment(self, before: Graph, after: Graph, tx: int,
-                       seg: str) -> None:
-        """Extract tx's delta from the before/after pair. All four
-        extracts filter on the tx literal, so they only materialize
-        wish-sized row sets; writes are single-file parquet."""
-        os.makedirs(seg, exist_ok=True)
-
-        def w(df, name):
-            rows = df.limit(1).collect()
-            if not rows:
-                return
-            df.coalesce(1).write.mode("overwrite") \
-                .parquet(os.path.join(seg, name))
-
-        w(after.nodes.where(F.col("valid_from_tx") == tx), "nodes")
-        w(after.edges.where(F.col("valid_from_tx") == tx), "edges")
-        w(after.attr_values.where(F.col("assigned_at_tx") == tx),
-          "attr_values")
-        w(after.txs.where(F.col("tx_id") == tx), "txs")
-        # closures: rows that existed BEFORE tx and were closed AT tx
-        w(after.nodes.where((F.col("valid_to_tx") == tx)
-                            & (F.col("valid_from_tx") < tx))
-          .select("id", "valid_from_tx",
-                  F.lit(tx).cast("long").alias("__closed_at")),
-          "node_closures")
-        w(after.edges.where((F.col("valid_to_tx") == tx)
-                            & (F.col("valid_from_tx") < tx))
-          .select("id", "valid_from_tx",
-                  F.lit(tx).cast("long").alias("__closed_at")),
-          "edge_closures")
-        w(after.attr_values.where((F.col("superseded_at_tx") == tx)
-                                  & (F.col("assigned_at_tx") < tx))
-          .select("ae_id", "assigned_at_tx",
-                  F.lit(tx).cast("long").alias("__closed_at")),
-          "av_closures")
-        # tag deltas: temporal names follow the same interval model
-        # as RAEs (Tag opens, Untag/re-Tag closes at tx)
-        if after.tags is not None:
-            w(after.tags.where(F.col("valid_from_tx") == tx), "tags")
-            w(after.tags.where((F.col("valid_to_tx") == tx)
-                               & (F.col("valid_from_tx") < tx))
-              .select("name", "valid_from_tx",
-                      F.lit(tx).cast("long").alias("__closed_at")),
-              "tag_closures")
